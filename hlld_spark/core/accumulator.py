@@ -15,8 +15,8 @@ companions (count-min, Bloom, t-digest, KLL) under the same interface
 ``update`` takes a whole Arrow/pandas batch — the per-row loop lives in
 vectorized numpy, never Python (input_hint requirement). Spark carries
 states as an opaque BinaryType column; partial aggregation happens in
-``mapInPandas`` (partition-local), final aggregation in
-``applyInPandas`` (register/counter merge), mirroring the reference's
+``mapInArrow`` (partition-local), final aggregation in
+``applyInArrow`` (register/counter merge), mirroring the reference's
 per-thread-update → shared-array two-phase shape
 (/root/reference/src/set.c:281-284).
 """

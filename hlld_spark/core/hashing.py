@@ -52,15 +52,6 @@ def _rotl_ip(x: np.ndarray, r: int, t: np.ndarray) -> None:
     np.bitwise_or(x, t, out=x)
 
 
-def _fmix64(k: np.ndarray) -> np.ndarray:
-    k = k ^ (k >> _S33)
-    k = k * _F1
-    k = k ^ (k >> _S33)
-    k = k * _F2
-    k = k ^ (k >> _S33)
-    return k
-
-
 def _fmix64_ip(k: np.ndarray, t: np.ndarray) -> None:
     np.right_shift(k, _S33, out=t)
     np.bitwise_xor(k, t, out=k)

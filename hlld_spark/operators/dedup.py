@@ -24,6 +24,8 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -238,10 +240,10 @@ def _gather_segments(
     return buf[idx], bounds
 
 
-def _char_shingle_hashes(texts: pd.Series, k: int) -> tuple[np.ndarray, np.ndarray]:
+def _char_shingle_hashes(texts, k: int) -> tuple[np.ndarray, np.ndarray]:
     """All k-char shingle hashes for a batch, concatenated, plus per-doc
     offsets — fully vectorized: one polynomial pass over the batch's
-    concatenated CODE-POINT buffer (UTF-32LE → uint32 lanes; k strided
+    concatenated CODE-POINT buffer (:func:`_codepoints`; k strided
     multiply-adds), boundary positions masked out, splitmix64
     finalization for mixing. No per-shingle Python objects.
 
@@ -249,9 +251,10 @@ def _char_shingle_hashes(texts: pd.Series, k: int) -> tuple[np.ndarray, np.ndarr
     k-shingle here exactly a k-CHARACTER n-gram, so the hashed Jaccard
     path agrees with the python-set character path on any unicode input,
     and minhash shingles mean the same thing for CJK text as for ASCII.
+    ``texts`` is a pandas Series or an Arrow string column; nulls are
+    empty docs.
     """
-    h, offsets, _lens = _char_shingle_hashes_with_lens(texts, k)
-    return h, offsets
+    return _window_hashes_blocked(*_codepoints(texts), k)
 
 
 #: window-hash block size (positions per chunk). 2^17 × 8 B keeps the
@@ -332,171 +335,119 @@ def _window_hashes_blocked(
     return hc, np.concatenate(([0], np.cumsum(counts)))
 
 
-def _char_shingle_hashes_with_lens(
-    texts: pd.Series, k: int
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """:func:`_char_shingle_hashes` that also returns each doc's
-    CODE-POINT length (r5, VERDICT r4 nit: decontaminate's char unit
-    needed per-doc lengths and recomputed them with a per-row Python
-    map — the kernel's own encode pass already has them)."""
-    enc = [(t or "").encode("utf-32-le") for t in texts]
-    lens = np.fromiter((len(b) >> 2 for b in enc), dtype=np.int64, count=len(enc))
-    # uint32 lanes straight from the encode; the blocked core upcasts
-    # chunk-by-chunk (half the DRAM traffic of a whole-buffer astype)
-    buf = np.frombuffer(b"".join(enc), dtype=np.uint32)
-    h, out_off = _window_hashes_blocked(buf, lens, k)
-    return h, out_off, lens
-
-
-def _u64_window_hashes(
-    stream: np.ndarray, offsets: np.ndarray, k: int
-) -> tuple[np.ndarray, np.ndarray]:
-    """Length-k window poly hashes over an arbitrary uint64 stream with
-    per-doc ``offsets`` — the windowing half of ``_char_shingle_hashes``
-    generalized so TOKEN-hash streams shingle through the exact same
-    code path. Docs with fewer than k elements emit ONE whole-doc
-    sentinel hash; returns (hashes, out_offsets)."""
-    lens = (offsets[1:] - offsets[:-1]).astype(np.int64)
-    return _window_hashes_blocked(stream, lens, k)
-
-
 # ---------------------------------------------------------------------------
-# ASCII/Arrow fast paths (r7): operate directly on the Arrow string
-# column's UTF-8 data buffer — for an all-ASCII, null-free batch the
-# byte values ARE the code points, so the char and token kernels can
-# skip Arrow→pandas conversion, the per-row ``str`` materialization and
-# the per-row utf-32 encode loop entirely (guide §4.2: whole-batch
-# native-code work on Arrow buffers). Non-ASCII or nulled batches fall
-# back to the exact pandas kernels; outputs are bit-identical either
-# way (asserted in tests/test_ascii_fastpath.py).
+# code-point front end: every shingle kernel reads a batch as ONE
+# concatenated code-point buffer plus per-doc code-point lengths. An
+# all-ASCII batch is its own code-point buffer (the Arrow UTF-8 data,
+# zero-copy); any other batch is decoded and UTF-32-encoded once as a
+# whole — no per-row str materialization or encode either way.
 # ---------------------------------------------------------------------------
 
-# Python's str.split() whitespace, restricted to ASCII: \t\n\v\f\r(9-13),
-# FS/GS/RS/US(28-31) and space(32). (\x85 and \xa0 are non-ASCII and
-# cannot appear on this path.)
-_ASCII_WS_LO = np.uint8(9)
-_ASCII_WS_HI = np.uint8(13)
-_ASCII_FS = np.uint8(28)
-_ASCII_US = np.uint8(31)
-_ASCII_SP = np.uint8(32)
+
+def _utf8_data(col: pa.Array) -> tuple[np.ndarray, np.ndarray]:
+    """(uint8 UTF-8 data, int64 per-doc offsets into it) of a string or
+    large_string array, rebased for sliced arrays; zero-copy except the
+    offsets."""
+    n = len(col)
+    if n == 0:
+        return np.zeros(0, dtype=np.uint8), np.zeros(1, dtype=np.int64)
+    bufs = col.buffers()
+    odt = np.int64 if pa.types.is_large_string(col.type) else np.int32
+    offs = np.frombuffer(bufs[1], dtype=odt, count=col.offset + n + 1)[col.offset :].astype(np.int64)
+    data = np.frombuffer(bufs[2], dtype=np.uint8, count=int(offs[-1]))[offs[0] :]
+    offs -= offs[0]
+    return data, offs
 
 
 def _ascii_text_buffer(col) -> tuple[np.ndarray, np.ndarray] | None:
-    """(uint8 data buffer, per-doc byte lengths) for an Arrow string
-    array/chunked-array holding only non-null ASCII text; None when the
-    fast path doesn't apply. Zero-copy except slicing."""
-    import pyarrow as pa
-
+    """(uint8 data buffer, per-doc byte lengths) for an Arrow string/
+    large_string array or chunked array holding only non-null ASCII
+    text; None otherwise. Zero-copy except slicing."""
     if isinstance(col, pa.ChunkedArray):
         col = col.combine_chunks()
-    if col.null_count or not pa.types.is_string(col.type):
+    if col.null_count or not (pa.types.is_string(col.type) or pa.types.is_large_string(col.type)):
         return None
-    n = len(col)
-    if n == 0:
-        return np.zeros(0, dtype=np.uint8), np.zeros(0, dtype=np.int64)
-    bufs = col.buffers()
-    offs = np.frombuffer(bufs[1], dtype=np.int32, count=col.offset + n + 1)[
-        col.offset : col.offset + n + 1
-    ].astype(np.int64)
-    data = np.frombuffer(bufs[2], dtype=np.uint8, count=int(offs[-1]))[offs[0] :]
+    data, offs = _utf8_data(col)
     if len(data) and int(data.max()) >= 128:
         return None
     return data, np.diff(offs)
 
 
-def _char_shingle_hashes_ascii(
-    data: np.ndarray, lens: np.ndarray, k: int
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """ASCII twin of :func:`_char_shingle_hashes_with_lens` (byte values
-    == code points, so hashes and per-doc lengths are bit-identical)."""
-    h, out_off = _window_hashes_blocked(data, lens, k)
-    return h, out_off, lens
+def _codepoints(texts) -> tuple[np.ndarray, np.ndarray]:
+    """(code-point buffer, per-doc code-point lengths) for a batch of
+    docs: a pandas Series (None/NaN → null) or an Arrow string/
+    large_string array, chunked or sliced. Nulls read as empty docs.
+    The buffer is a zero-copy ``uint8`` view of the UTF-8 data when the
+    batch is all ASCII (byte values ARE code points there), else one
+    whole-batch ``uint32`` UTF-32 encode."""
+    if isinstance(texts, pd.Series):
+        col = pa.array(texts, type=pa.string(), from_pandas=True)
+    elif isinstance(texts, pa.ChunkedArray):
+        col = texts.combine_chunks()
+    else:
+        col = texts
+    if col.null_count:
+        col = pc.fill_null(col, "")
+    ascii_buf = _ascii_text_buffer(col)
+    if ascii_buf is not None:
+        return ascii_buf
+    data, _ = _utf8_data(col)
+    lens = pc.utf8_length(col).to_numpy().astype(np.int64)
+    return np.frombuffer(str(data, "utf-8").encode("utf-32-le"), dtype=np.uint32), lens
 
 
-def _token_shingle_hashes_ascii(
-    data: np.ndarray, lens: np.ndarray, n: int
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """ASCII twin of :func:`_token_shingle_hashes`: token boundaries
-    from one vectorized whitespace scan over the byte buffer (same
-    split set as ``str.split()`` restricted to ASCII), token hashes via
-    the same segment kernel, windowing via the same blocked core —
-    bit-identical output, no per-row Python."""
-    offsets = np.concatenate(([0], np.cumsum(lens)))
-    total = int(offsets[-1])
-    if total == 0:
-        ntoks = np.zeros(len(lens), dtype=np.int64)
-        h, out_off = _window_hashes_blocked(
-            np.zeros(0, dtype=np.uint64), ntoks, n
-        )
-        return h, out_off, ntoks
-    ws = (
-        (data == _ASCII_SP)
-        | ((data >= _ASCII_WS_LO) & (data <= _ASCII_WS_HI))
-        | ((data >= _ASCII_FS) & (data <= _ASCII_US))
-    )
-    m = ~ws
-    # a token starts where a non-space has no preceding non-space IN THE
-    # SAME DOC, and ends where it has no following one — doc boundaries
-    # are forced breaks so adjacent docs can never merge tokens
-    prev_ns = np.empty(total, dtype=bool)
-    prev_ns[0] = False
-    prev_ns[1:] = m[:-1]
-    prev_ns[offsets[:-1]] = False
-    next_ns = np.empty(total, dtype=bool)
-    next_ns[-1] = False
-    next_ns[:-1] = m[1:]
-    nz_ends = offsets[1:] - 1
-    next_ns[nz_ends[nz_ends >= 0]] = False
-    starts = np.flatnonzero(m & ~prev_ns)
-    ends = np.flatnonzero(m & ~next_ns) + 1
-    tok_h = _splitmix(_segment_poly_hashes(data, starts, ends))
-    ntoks = np.diff(np.searchsorted(starts, offsets))
-    h, out_off = _window_hashes_blocked(tok_h, ntoks, n)
-    return h, out_off, ntoks
+#: ``str.split()`` whitespace (== ``str.isspace()``) as a code-point
+#: lookup table. Every such code point is ≤ U+3000, so one trailing
+#: False slot answers for all larger code points (clipped onto it).
+#: Its first 256 rows double as a ``bytes.translate`` table for uint8
+#: buffers — the same lookup at ~1 ns/byte, where numpy's gather
+#: costs ~3 (measured).
+_WS_MAX = 0x3000
+_IS_SPACE = np.array([chr(c).isspace() for c in range(_WS_MAX + 1)] + [False])
+_SPACE_BYTES = _IS_SPACE[:256].astype(np.uint8).tobytes()
 
 
-def _token_shingle_hashes(
-    texts: pd.Series, n: int
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+def _token_shingle_hashes(texts, n: int) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """All n-TOKEN shingle hashes per doc (tokens = ``str.split()``
     whitespace words, the GPT-3-appendix / Llama 13-gram unit), plus
     per-doc offsets and per-doc token counts.
 
-    Fully vectorized after tokenization: docs are single-space
-    normalized and encoded once; every token is segment-hashed in one
-    prefix-scan pass (``_segment_poly_hashes``) — token boundaries come
-    from one ``buf == ' '`` scan, since normalized tokens can't contain
-    whitespace — then splitmixed token hashes shingle through the same
-    windowing kernel char mode uses (``_u64_window_hashes``). Two token
-    windows hash equal iff their token sequences are equal (up to 64-bit
-    collisions, like every hashed path here). Docs with fewer than n
-    tokens emit ONE sentinel hash — callers mask slot offsets[d] exactly
-    as in char mode.
+    Fully vectorized over the batch's code-point buffer
+    (:func:`_codepoints`): token boundaries come from one whitespace-
+    table scan with doc boundaries forced as breaks, every token is
+    segment-hashed in one pass (``_segment_poly_hashes``), then the
+    splitmixed token hashes shingle through the same windowing kernel
+    char mode uses (``_window_hashes_blocked``). Two token windows hash
+    equal iff their token sequences are equal (up to 64-bit collisions,
+    like every hashed path here). Docs with fewer than n tokens emit ONE
+    sentinel hash — callers mask slot offsets[d] exactly as in char mode.
     """
-    toks_per_doc = [t.split() if isinstance(t, str) else [] for t in texts]
-    ntoks = np.fromiter((len(x) for x in toks_per_doc), dtype=np.int64, count=len(toks_per_doc))
-    enc = [" ".join(x).encode("utf-32-le") for x in toks_per_doc]
-    lens = np.fromiter((len(b) >> 2 for b in enc), dtype=np.int64, count=len(enc))
-    buf = np.frombuffer(b"".join(enc), dtype=np.uint32).astype(np.uint64)
+    buf, lens = _codepoints(texts)
     offsets = np.concatenate(([0], np.cumsum(lens)))
-    # token boundaries: every 0x20 in the normalized buffer separates two
-    # tokens of ONE doc; non-empty docs contribute their start/end.
-    # Built as boolean masks so flatnonzero yields them already sorted
-    # (no O(t log t) sort — r4 perf)
     total = int(offsets[-1])
-    is_space = buf == _U64(0x20)
-    nz = ntoks > 0
-    start_mask = np.zeros(total + 1, dtype=bool)
-    end_mask = np.zeros(total + 1, dtype=bool)
-    start_mask[1:][is_space] = True
-    start_mask[offsets[:-1][nz]] = True
-    end_mask[:-1][is_space] = True
-    end_mask[offsets[1:][nz]] = True
-    starts = np.flatnonzero(start_mask[:-1] if total else start_mask[:0])
-    ends = np.flatnonzero(end_mask)
+    if buf.dtype == np.uint8:
+        m = ~np.frombuffer(buf.tobytes().translate(_SPACE_BYTES), dtype=bool)
+    else:
+        m = ~np.take(_IS_SPACE, buf, mode="clip")
+    # a token starts where a non-space has no preceding non-space IN THE
+    # SAME DOC, and ends where it has no following one — doc boundaries
+    # are forced breaks so adjacent docs can never merge tokens. Empty
+    # docs put their start at the next doc's start (or at `total`, past
+    # the buffer, when they end the batch) and their last position at
+    # the previous doc's, hence the range masks.
+    prev_ns = np.zeros(total, dtype=bool)
+    prev_ns[1:] = m[:-1]
+    doc_starts = offsets[:-1]
+    prev_ns[doc_starts[doc_starts < total]] = False
+    next_ns = np.zeros(total, dtype=bool)
+    next_ns[:-1] = m[1:]
+    doc_lasts = offsets[1:] - 1
+    next_ns[doc_lasts[doc_lasts >= 0]] = False
+    starts = np.flatnonzero(m & ~prev_ns)
+    ends = np.flatnonzero(m & ~next_ns) + 1
     tok_h = _splitmix(_segment_poly_hashes(buf, starts, ends))
-    doc_tok_off = np.concatenate(([0], np.cumsum(ntoks)))
-    h, out_off = _u64_window_hashes(tok_h, doc_tok_off, n)
+    ntoks = np.diff(np.searchsorted(starts, offsets))
+    h, out_off = _window_hashes_blocked(tok_h, ntoks, n)
     return h, out_off, ntoks
 
 
@@ -1001,8 +952,8 @@ def _pairwise_jaccard_hashed(a: pd.Series, b: pd.Series, n: int) -> np.ndarray:
     variant and searchsorted/sort-joint loop bodies all measure within
     ±10% of this loop — np.unique's slice sorts dominate, and they are
     irreducible work.)"""
-    ha, oa = _char_shingle_hashes(a.fillna(""), n)
-    hb, ob = _char_shingle_hashes(b.fillna(""), n)
+    ha, oa = _char_shingle_hashes(a, n)
+    hb, ob = _char_shingle_hashes(b, n)
     outv = np.zeros(len(a))
     for i in range(len(a)):
         sx = np.unique(ha[oa[i] : oa[i + 1]])
@@ -1187,7 +1138,8 @@ def _span_gram_stream(
 
     def grams_fn(batches):
         for pdf in batches:
-            h, offsets, lens = _char_shingle_hashes_with_lens(pdf[text_col], span)
+            buf, lens = _codepoints(pdf[text_col])
+            h, offsets = _window_hashes_blocked(buf, lens, span)
             if not len(h):
                 continue
             counts = np.maximum(lens - span + 1, 0)

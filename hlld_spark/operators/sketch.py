@@ -5,13 +5,19 @@ updates into a shared array (/root/reference/src/conn_handler.c:166-217,
 src/set.c:267-289). Its distributed shape here:
 
     stage 1  mapInArrow    — partition-local build: hash + rho + scatter-max
-                             over Arrow batches (pandas fallback on old
-                             PySpark), one partial sketch per
+                             over Arrow batches, one partial sketch per
                              (partition, group). This is Catalyst's
                              partial-aggregate phase, hand-rolled because
                              Python UDAFs can't partial-agg natively.
-    stage 2  applyInPandas — register-wise max (HLL) / counter-sum (CMS) /
-                             bitwise-OR (Bloom) merge per group.
+    stage 2  applyInArrow  — register-wise max (HLL) / counter-sum (CMS) /
+                             bitwise-OR (Bloom) merge per group
+                             (``groupBy(*keys).applyInArrow``); a global
+                             build tree-merges its partials with
+                             ``mapInArrow`` instead (:func:`_merge_global`).
+                             Both run the same Arrow merge body, and
+                             :func:`_merge` is the one place that picks
+                             between them. Everything is Arrow-native:
+                             there is no pandas path.
 
 Scale properties (designed for 10^12 rows / 1000 executors):
 
@@ -34,6 +40,7 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import BinaryType, DoubleType, LongType, StructField, StructType
 
@@ -51,24 +58,13 @@ def _result_schema(df: DataFrame, keys: list[str]) -> StructType:
     return StructType(fields)
 
 
-def _group_indices(pdf: pd.DataFrame, keys: list[str]) -> dict[tuple, np.ndarray]:
-    if not keys:
-        return {(): np.arange(len(pdf))}
-    grouped = pdf.groupby(keys, sort=False, dropna=False).indices
-    if len(keys) == 1:
-        return {(k,): v for k, v in grouped.items()}
-    return grouped
-
-
 def _make_build_partials_arrow(keys: list[str], col: str, spec):
     """Arrow-native partial build (mapInArrow): no pandas conversion, no
     per-row PyObject strings — group codes via C++ dictionary_encode,
-    hashes via the zero-copy arrow buffer path. This is the hot path; the
-    pandas variant below is the fallback."""
+    hashes via the zero-copy arrow buffer path."""
     acc_kind = spec.kind
 
     def build_partials(batches):
-        import pyarrow as pa
         import pyarrow.compute as pc
 
         from ..core.accumulator import _ACCUMULATORS, new_builder
@@ -155,60 +151,45 @@ def _make_build_partials_arrow(keys: list[str], col: str, spec):
     return build_partials
 
 
-def _make_build_partials(keys: list[str], col: str, spec):
-    acc_kind = spec.kind
+def _merge_partials(keys: list[str]):
+    """The one Arrow merge body: folds a stream of partial-sketch
+    batches (keys..., sketch, n_rows) into ONE row — the keys of the
+    first row, the merged sketch, the summed n_rows. Runs per group
+    under ``applyInArrow`` (iterator form, selected by the type hints)
+    and per partition under the global tree's ``mapInArrow``."""
 
-    def build_partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..core.accumulator import _ACCUMULATORS
-
-        acc = _ACCUMULATORS[acc_kind]
-        states: dict[tuple, object] = {}
-        counts: dict[tuple, int] = {}
-        for pdf in batches:
-            values = pdf[col]
-            mask = values.notna()
-            if not mask.all():
-                pdf = pdf[mask]
-                values = pdf[col]
-            if len(pdf) == 0:
-                continue
-            # hash/ingest the whole batch column once, slice per group
-            prepared = acc.prepare_batch(values, spec) if hasattr(acc, "prepare_batch") else None
-            for gkey, idx in _group_indices(pdf, keys).items():
-                st = states.get(gkey)
-                if st is None:
-                    st = acc.zero(spec)
-                    counts[gkey] = 0
-                if prepared is not None:
-                    st = acc.update_prepared(st, prepared, idx, spec)
+    def merge(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        acc = state = spec = head = None
+        n = 0
+        for rb in batches:
+            if head is None and rb.num_rows:
+                head = rb.slice(0, 1)
+            sketches = rb.column(_SKETCH_FIELD).to_pylist()
+            for buf, nr in zip(sketches, rb.column(_NROWS_FIELD).to_pylist()):
+                a, st, sp = deserialize_any(buf)
+                if state is None:
+                    acc, state, spec = a, st, sp
                 else:
-                    st = acc.update(st, values.iloc[idx], spec)
-                states[gkey] = st
-                counts[gkey] += len(idx)
-        if not states:
-            return
-        rows = {k: [g[i] for g in states] for i, k in enumerate(keys)}
-        out = pd.DataFrame(rows)
-        out[_SKETCH_FIELD] = [acc.serialize(s, spec) for s in states.values()]
-        out[_NROWS_FIELD] = np.fromiter(counts.values(), dtype=np.int64, count=len(counts))
-        yield out
+                    state = acc.merge(state, st, spec)
+                n += int(nr)
+        if state is not None:
+            yield pa.RecordBatch.from_arrays(
+                [head.column(k) for k in keys]
+                + [pa.array([acc.serialize(state, spec)], pa.binary()), pa.array([n], pa.int64())],
+                names=keys + [_SKETCH_FIELD, _NROWS_FIELD],
+            )
 
-    return build_partials
+    return merge
 
 
-def _make_merge_partials(keys: list[str]):
-    def merge_partials(pdf: pd.DataFrame) -> pd.DataFrame:
-        bufs = pdf[_SKETCH_FIELD]
-        acc, state, spec = deserialize_any(bufs.iloc[0])
-        for b in bufs.iloc[1:]:
-            _, other, ospec = deserialize_any(b)
-            state = acc.merge(state, other, spec)
-        row = {k: [pdf[k].iloc[0]] for k in keys}
-        row[_SKETCH_FIELD] = [acc.serialize(state, spec)]
-        row[_NROWS_FIELD] = [int(pdf[_NROWS_FIELD].sum())]
-        return pd.DataFrame(row)
-
-    return merge_partials
+def _merge(partials: DataFrame, keys: list[str], schema) -> DataFrame:
+    """Merge partial sketches to one row per group — the only place
+    that knows how partials merge. No keys: the global tree
+    (:func:`_merge_global`); keys: ``groupBy(*keys).applyInArrow``.
+    Both run :func:`_merge_partials`."""
+    if not keys:
+        return _merge_global(partials, schema)
+    return partials.groupBy(*keys).applyInArrow(_merge_partials(keys), schema=schema)
 
 
 #: above this many partial sketches, global merges go through a
@@ -242,15 +223,12 @@ def _merge_global(partials: DataFrame, schema) -> DataFrame:
     published error bounds (same property the keyed groupBy merge
     already relies on).
     """
-    use_arrow = hasattr(partials, "mapInArrow")
-    factory = _merge_all_arrow_factory if use_arrow else _merge_all_factory
-    mapper = "mapInArrow" if use_arrow else "mapInPandas"
     n = partials.rdd.getNumPartitions()
     out = partials
     if n > _GLOBAL_MERGE_FANIN:
         mid = int(math.ceil(math.sqrt(n)))
-        out = getattr(out.repartition(mid), mapper)(factory(), schema=schema)
-    return getattr(out.repartition(1), mapper)(factory(), schema=schema)
+        out = out.repartition(mid).mapInArrow(_merge_partials([]), schema=schema)
+    return out.repartition(1).mapInArrow(_merge_partials([]), schema=schema)
 
 
 def build_sketches(
@@ -272,14 +250,8 @@ def build_sketches(
     if salt_partitions:
         pruned = pruned.repartition(salt_partitions, F.col(col) if not keys else F.col(keys[0]))
     schema = _result_schema(pruned, keys)
-    if hasattr(pruned, "mapInArrow"):
-        partials = pruned.mapInArrow(_make_build_partials_arrow(keys, col, spec), schema=schema)
-    else:  # older PySpark fallback: pandas batches
-        partials = pruned.mapInPandas(_make_build_partials(keys, col, spec), schema=schema)
-    if not keys:
-        # global sketch: exchange the KB-sized partials, tree-merge
-        return _merge_global(partials, schema)
-    return partials.groupBy(*keys).applyInPandas(_make_merge_partials(keys), schema=schema)
+    partials = pruned.mapInArrow(_make_build_partials_arrow(keys, col, spec), schema=schema)
+    return _merge(partials, keys, schema)
 
 
 def _pq_filter_to_expr(filters):
@@ -391,52 +363,7 @@ def build_sketches_parquet(
         # 1.05 s at bench scale); compute-heavy consumers keep waves=2
         waves=1,
     )
-    if not keys:
-        return _merge_global(partials, schema)
-    return partials.groupBy(*keys).applyInPandas(_make_merge_partials(keys), schema=schema)
-
-
-def _merge_all_arrow_factory():
-    def merge_all(batches):
-        import pyarrow as pa
-
-        acc = state = spec = None
-        n = 0
-        for rb in batches:
-            sk_i = rb.schema.get_field_index(_SKETCH_FIELD)
-            nr_i = rb.schema.get_field_index(_NROWS_FIELD)
-            for buf, nr in zip(rb.column(sk_i).to_pylist(), rb.column(nr_i).to_pylist()):
-                a, st, sp = deserialize_any(buf)
-                if state is None:
-                    acc, state, spec = a, st, sp
-                else:
-                    state = acc.merge(state, st, spec)
-                n += int(nr)
-        if state is not None:
-            yield pa.RecordBatch.from_arrays(
-                [pa.array([acc.serialize(state, spec)], pa.binary()), pa.array([n], pa.int64())],
-                names=[_SKETCH_FIELD, _NROWS_FIELD],
-            )
-
-    return merge_all
-
-
-def _merge_all_factory():
-    def merge_all(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        acc = state = spec = None
-        n = 0
-        for pdf in batches:
-            for buf, nr in zip(pdf[_SKETCH_FIELD], pdf[_NROWS_FIELD]):
-                a, st, sp = deserialize_any(buf)
-                if state is None:
-                    acc, state, spec = a, st, sp
-                else:
-                    state = acc.merge(state, st, spec)
-                n += int(nr)
-        if state is not None:
-            yield pd.DataFrame({_SKETCH_FIELD: [acc.serialize(state, spec)], _NROWS_FIELD: [n]})
-
-    return merge_all
+    return _merge(partials, keys, schema)
 
 
 def merge_sketches(sketch_df: DataFrame, keys: list[str] | None) -> DataFrame:
@@ -448,13 +375,7 @@ def merge_sketches(sketch_df: DataFrame, keys: list[str] | None) -> DataFrame:
     """
     keys = list(keys or [])
     base = sketch_df.select(*keys, _SKETCH_FIELD, _NROWS_FIELD)
-    if not keys:
-        schema = StructType(
-            [StructField(_SKETCH_FIELD, BinaryType(), False), StructField(_NROWS_FIELD, LongType(), False)]
-        )
-        return _merge_global(base, schema)
-    schema = _result_schema(base, keys)
-    return base.groupBy(*keys).applyInPandas(_make_merge_partials(keys), schema=schema)
+    return _merge(base, keys, _result_schema(base, keys))
 
 
 def rollup_sketches(df: DataFrame, keys: list[str], col: str, spec=None) -> DataFrame:
@@ -493,11 +414,6 @@ def sketch_estimate(bufs: pd.Series) -> pd.Series:
         acc, state, spec = deserialize_any(b)
         out[i] = acc.estimate(state, spec)
     return pd.Series(out)
-
-
-@F.pandas_udf(LongType())
-def sketch_size_bytes(bufs: pd.Series) -> pd.Series:
-    return pd.Series([len(b) for b in bufs], dtype=np.int64)
 
 
 def with_estimate(sketch_df: DataFrame, out: str = "estimate") -> DataFrame:

@@ -30,14 +30,15 @@ def plan_parquet_splits(
     still parallelizes). A split is (file, rg_lo, rg_hi) with lo=-1
     meaning the whole file.
 
-    ``waves``: task count target in multiples of the parallelism, when
-    files outnumber cores. 2 (default) balances straggler smoothing for
-    compute-heavy consumers; scan-dominated uniform consumers (the
-    sketch build) pass 1 — every Python task costs ~5-10 ms of
-    serialized handshake, so halving the task count measurably wins
-    when per-task compute is small (r7 A/B in OPTIMIZATION_r07.md).
-    Only relevant when files ≲ waves·parallelism; at corpus scale the
-    file count dominates either way."""
+    ``waves``: the task count is capped at ``waves·parallelism``
+    (unless ``files_per_task`` is given), so whenever there are more
+    splits than that — any large input, at any file count — ``waves``
+    alone sets the task count, and ``waves=1`` halves it against the
+    default 2. 2 balances straggler smoothing for compute-heavy
+    consumers; scan-dominated uniform consumers (the sketch build) pass
+    1 — every Python task costs ~5-10 ms of serialized handshake, so
+    halving the task count measurably wins when per-task compute is
+    small (r7 A/B in OPTIMIZATION_r07.md)."""
     from ..operators.sketch import list_parquet_files
 
     files = list_parquet_files(path)

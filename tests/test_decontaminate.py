@@ -347,3 +347,28 @@ def test_unrelated_valueerror_propagates(spark, monkeypatch):
         d.decontaminate(docs, ev, "id", "text")
     # the overflow subtype still takes the fallback (sanity: it's a ValueError)
     assert issubclass(d.EvalGramOverflow, ValueError)
+
+
+def test_token_parquet_batch_ending_in_empty_doc(spark, tmp_path):
+    """An all-ASCII parquet batch whose LAST doc is empty: the Arrow
+    token probe must place every doc's token start inside the batch
+    buffer (an empty last doc starts at its end) and return the same
+    flags as the DataFrame path."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from hlld_spark.operators.decontaminate import decontaminate_parquet
+
+    texts = [f"intro context {_EVAL_PASSAGE} trailing", "plain clean words", ""]
+    p = str(tmp_path / "ends_empty.parquet")
+    pq.write_table(pa.table({"doc_id": pa.array([0, 1, 2], pa.int64()), "text": texts}), p)
+    ev = _token_eval(spark)
+    base = sorted(
+        (r["doc_id"], r["n_matched_grams"])
+        for r in decontaminate(spark.read.parquet(p), ev, "doc_id", "text", n=13).collect()
+    )
+    got = sorted(
+        (r["doc_id"], r["n_matched_grams"])
+        for r in decontaminate_parquet(spark, p, ev, "doc_id", "text", n=13, unit="token").collect()
+    )
+    assert got == base == [(0, 9)]
